@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Extra benchmarks (guide §1.4): noop-sink isolation of each chain stage.
+"""Extra benchmarks (guide §1.4): noop-sink isolation of each chain stage
+and of any registered query.
 
 NOT the driver's bench — bench.py is frozen; this file exists so
 optimization work can attribute time to individual operators. Timings are
@@ -7,6 +8,15 @@ min-of-N with full recomputation per trial (no caching anywhere).
 
 Usage:
     python bench_extra.py [--trials 3] [--stages s1,s2,...]
+
+``--stages`` takes chain stage names (the ``stages`` table below; all of
+them by default) and registered query names (``__spark_entry__.queries()``,
+run through the noop sink). Where a name is both — ``transcripts``,
+``dedup``, ``top_issues``, ``summary`` — the chain stage of the same
+computation is timed. To time every registered query:
+
+    python bench_extra.py --trials 2 --stages "$(python -c \
+        'import __spark_entry__ as e; print(",".join(e.queries()))')"
 """
 
 from __future__ import annotations
@@ -33,6 +43,7 @@ def main():
     from pyspark.sql import functions as F
 
     from timberline_spark import aggregate as agg
+    from timberline_spark import queries as Q
     from timberline_spark import route
     from timberline_spark.enrich import enrich_turns
     from timberline_spark.parse import parse_turns
@@ -83,6 +94,11 @@ def main():
         ),
     }
     wanted = args.stages.split(",") if args.stages else list(stages)
+    for name, fn in (Q.PIPELINE_QUERIES | Q.EXTRA_QUERIES).items():
+        stages.setdefault(name, lambda fn=fn: noop(fn(spark, sf_dir)))
+    unknown = [n for n in wanted if n not in stages]
+    if unknown:
+        ap.error(f"unknown stage or query: {', '.join(unknown)}")
 
     # warm codegen/JIT once on a small slice so trial 1 isn't compile-bound
     noop(classified().limit(2000))

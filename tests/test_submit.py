@@ -1,6 +1,8 @@
 """North-rule packaging check: the pipeline runs via spark-submit
---py-files with every import resolved from dist/timberline_spark.zip
-(cwd outside the repo, so the zip is the only source of the package)."""
+--py-files with every import resolved from the zip scripts/package.sh
+builds (cwd outside the repo, so the zip is the only source of the
+package). The zip is built into the test's own temp dir, so a run leaves
+the checkout untouched."""
 
 from __future__ import annotations
 
@@ -21,11 +23,14 @@ SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not on this host"
 )
 def test_spark_submit_py_files_runs_pipeline():
-    subprocess.run(["sh", f"{REPO}/scripts/package.sh"], check=True, cwd=REPO)
     work = tempfile.mkdtemp(prefix="tl_submit_")
     try:
+        subprocess.run(
+            ["sh", f"{REPO}/scripts/package.sh", f"{work}/timberline_spark.zip"],
+            check=True,
+            cwd=work,
+        )
         shutil.copy(f"{REPO}/run_pipeline.py", work)
-        shutil.copy(f"{REPO}/dist/timberline_spark.zip", work)
         r = subprocess.run(
             [
                 SPARK_SUBMIT,

@@ -35,95 +35,13 @@ def _tokens(col):
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), 0)
 
 
-def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
-        F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0))
-        .cast("long")
-        .alias("n_bpe_pieces"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-    )
-
-
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality signals: token stats + punctuation + stopword ratios."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    n_tok = F.size(toks).cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    n_punct = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(PUNCT_RE), 0))
-        .cast("long")
-    )
-    total_tok_chars = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return df.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        n_punct.alias("n_punct"),
-        F.round(n_stop / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4).alias(
-            "stopword_ratio"
-        ),
-        F.round(n_punct / F.nullif(F.length("text").cast("double"), F.lit(0.0)), 4).alias(
-            "punct_ratio"
-        ),
-        F.round(
-            total_tok_chars / F.nullif(n_tok.cast("double"), F.lit(0.0)), 4
-        ).alias("mean_token_len"),
-    )
-
-
-def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-hit heuristic language ID (n-gram-free, deterministic)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    n_tok = F.size(toks).cast("long")
-    n_stop = (
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(STOPWORD_RE), 0))
-        .cast("long")
-    )
-    pred = F.when(
-        (n_tok > 0)
-        & (n_stop.cast("double") / n_tok.cast("double") >= LANG_STOPWORD_MIN_RATIO),
-        "en",
-    ).otherwise("unknown")
-    return df.select(
-        "doc_id", F.col("lang").alias("lang_label"), pred.alias("lang_pred")
-    )
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling polynomial hash over token shape (len, first-char codepoint).
-
-    Cross-engine deterministic: uses only length/ascii/arithmetic, so the
-    DuckDB oracle computes the identical value. This is the shape-level
-    document fingerprint used for cheap near-dup bucketing.
-    """
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    fp = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * FP_MULT + F.length(x) * 17 + F.ascii(x)) % FP_MOD,
-    )
-    return df.select("doc_id", fp.alias("fingerprint"))
-
-
 def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Folded registry view: token counts + quality + lang-ID + fingerprint
-    in ONE scan-only projection (the driver checks at most 50 registered
-    queries per round; these four per-doc operators share a row while each
-    column set stays individually hash-checked). At 100 TB this is also
-    simply the better plan — one scan computes all the signals instead of
-    four passes over the corpus."""
+    """Per-doc text signals: token counts + quality + lang-ID + fingerprint
+    in ONE scan-only projection. Each signal family has its own DuckDB
+    oracle (oracle_token_counts / _quality / _lang_id / _fingerprint) that
+    tests check column-subset by column-subset; oracle_text_stats joins all
+    four. At 100 TB this is also simply the better plan — one scan
+    computes all the signals instead of four passes over the corpus."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # toks staged as a named column: the mean-token-len and fingerprint
     # HOF folds below reference it repeatedly (HOF lambdas inline, not CSE)
@@ -205,8 +123,8 @@ def doc_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``xxhash64(norm_text)`` (8 bytes/doc on the wire, not the KB-sized
     text; the DuckDB oracle groups on the text itself — same keepers
     absent a 64-bit collision, and the curation runner carries the
-    collision sentinel for that). Every signal is shared with the
-    standalone operators above so thresholds stay in one place."""
+    collision sentinel for that). Every signal is shared with
+    :func:`doc_text_stats` so thresholds stay in one place."""
     from pyspark.sql import Window
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -38,10 +38,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,16 +53,17 @@ from .parse import parse_turns
 from .transcripts import load_transcripts
 
 STAGE_CLASSIFIED = "stage_classified"
-SINKS = ("sink_errors", "sink_tool_calls", "sink_anomalies")
-AGG_TABLES = ("report_buckets", "top_issues", "report_summary")
 
 LINEAGE_SCHEMA = (
-    "run_id string, stage string, partition string, rows bigint,"
-    " committed_at double, status string"
+    T.StructType()
+    .add("run_id", "string").add("stage", "string").add("partition", "string")
+    .add("rows", "long").add("committed_at", "double").add("status", "string")
 )
 METRICS_SCHEMA = (
-    "run_id string, stage string, partition string, rows_in bigint,"
-    " rows_out bigint, invalid bigint, elapsed_sec double"
+    T.StructType()
+    .add("run_id", "string").add("stage", "string").add("partition", "string")
+    .add("rows_in", "long").add("rows_out", "long").add("invalid", "long")
+    .add("elapsed_sec", "double")
 )
 
 
@@ -149,64 +151,29 @@ def _derive_files_per_date(
     return files_for(n * (1 if input_table else max(1, replicate)), n_days)
 
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    import os
+def _write_small_table(out_dir: str, table: str, schema: T.StructType, row_dicts):
+    """Add the rows as ONE driver-written parquet file to a tiny table.
 
-    if not os.path.isdir(f"{out_dir}/_lineage"):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(f"{out_dir}/_lineage")
-
-
-_PA_TYPES = {"string": "string", "bigint": "int64", "double": "float64"}
-
-
-def _append(spark: SparkSession, out_dir: str, table: str, rows, schema: str):
-    """Append tiny bookkeeping rows as ONE driver-written parquet file.
-
-    These are a handful of rows per run; a Spark job for each (the round-2
+    Used for the bookkeeping appends (``_lineage``, ``_metrics``) and the
+    already-collected result tables (``top_issues``, ``report_summary``):
+    a handful of rows per run. A Spark job for each (the round-2
     coalesce(1) writes) costs a full schedule/commit round-trip on a real
     cluster — part of the measured ~20 s serial tail that caps N->4N
-    scaling. pyarrow on the driver writes the same parquet with zero
-    cluster involvement; Spark reads the directory identically."""
-    if not rows:
-        return
+    scaling; pyarrow on the driver writes the same parquet with zero
+    cluster involvement, and Spark reads the directory identically.
+    Column types come from the Spark schema, so an empty result still
+    writes a typed, readable table; types outside the primitive map
+    (array/map/decimal/...) fall back to pyarrow's inference over the
+    values instead of crashing the run."""
     import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split()
-        fields.append((name, getattr(pa, _PA_TYPES[typ])()))
-    cols = list(zip(*rows))
-    t = pa.table(
-        {name: pa.array(list(col), type=typ) for (name, typ), col in zip(fields, cols)}
-    )
-    os.makedirs(f"{out_dir}/{table}", exist_ok=True)
-    pq.write_table(t, f"{out_dir}/{table}/part-{uuid.uuid4().hex}.parquet")
-
-
-def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
-    """Overwrite a tiny result table (<= tens of rows, already collected)
-    with one driver-written parquet file — replaces a coalesce(1) Spark job
-    (same serial-tail rationale as _append). Schema is translated from the
-    Spark schema so an empty result still writes a typed, readable table.
-    Types outside the primitive map (timestamp/array/decimal/...) fall back
-    to pyarrow's type inference over the collected values instead of
-    crashing the run on a KeyError."""
-    import shutil as _sh
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     type_map = {
-        "long": pa.int64(),
         "bigint": pa.int64(),
         "int": pa.int32(),
-        "integer": pa.int32(),
         "double": pa.float64(),
         "float": pa.float32(),
         "string": pa.string(),
@@ -216,22 +183,17 @@ def _write_small_table(out_dir: str, table: str, spark_schema, row_dicts):
         "timestamp_ntz": pa.timestamp("us"),
         "binary": pa.binary(),
     }
-    fields = [
-        (f.name, type_map.get(f.dataType.simpleString()))
-        for f in spark_schema.fields
-    ]
     t = pa.table(
         {
             # type=None -> pyarrow infers from the values (complex Spark
-            # types: arrays, maps, decimals); typed when the map covers it
-            # so empty tables stay readable with the right schema
-            name: pa.array([d[name] for d in row_dicts], type=typ)
-            for name, typ in fields
+            # types: arrays, maps, decimals)
+            f.name: pa.array(
+                [d[f.name] for d in row_dicts],
+                type=type_map.get(f.dataType.simpleString()),
+            )
+            for f in schema.fields
         }
     )
-    import os
-
-    _sh.rmtree(f"{out_dir}/{table}", ignore_errors=True)
     os.makedirs(f"{out_dir}/{table}", exist_ok=True)
     pq.write_table(t, f"{out_dir}/{table}/part-{uuid.uuid4().hex}.parquet")
 
@@ -245,9 +207,7 @@ def _pin_run_config(out_dir: str, run_id: str, cfg: dict) -> None:
     new partitions would silently disagree (e.g. half the sink rows
     redacted). The first invocation pins its config as a tiny driver-side
     JSON; any later invocation with the same (out_dir, run_id) must
-    match or it fails loudly naming the drifted flags. parse_impl is
-    deliberately NOT pinned: native and pandas parse are oracle-verified
-    identical (tests/test_oracle_parity.py pandas-vs-native).
+    match or it fails loudly naming the drifted flags.
     """
     import os
 
@@ -277,7 +237,6 @@ def run_pipeline(
     sf_dir: str,
     out_dir: str,
     run_id: str,
-    parse_impl: str = "native",
     replicate: int = 1,
     max_partitions: int | None = None,
     input_table: str | None = None,
@@ -351,7 +310,7 @@ def run_pipeline(
     # which is what scopes stage 2+3 to THIS run's dates — another run's
     # dates stay in the shared tables but out of this run's aggregation.
     classified = route.classify_turns(
-        enrich_turns(spark, parse_turns(tr, impl=parse_impl))
+        enrich_turns(spark, parse_turns(tr))
     ).select(*stage_cols)
     if redact:
         from .redact import redact_text
@@ -373,7 +332,7 @@ def run_pipeline(
     if os.path.isdir(f"{out_dir}/_lineage"):
         done = {
             r.partition
-            for r in _read_lineage(spark, out_dir)
+            for r in spark.read.parquet(f"{out_dir}/_lineage")
             .filter(
                 (F.col("run_id") == run_id)
                 & (F.col("stage") == STAGE_CLASSIFIED)
@@ -465,15 +424,21 @@ def run_pipeline(
     todo = sorted(per_part) if pre_todo is None else pre_todo
     if todo:
         now = time.time()
-        _append(
-            spark,
+        _write_small_table(
             out_dir,
             "_lineage",
+            LINEAGE_SCHEMA,
             [
-                (run_id, STAGE_CLASSIFIED, p, int(per_part.get(p, (0, 0))[0]), now, "committed")
+                {
+                    "run_id": run_id,
+                    "stage": STAGE_CLASSIFIED,
+                    "partition": p,
+                    "rows": int(per_part.get(p, (0, 0))[0]),
+                    "committed_at": now,
+                    "status": "committed",
+                }
                 for p in todo
             ],
-            LINEAGE_SCHEMA,
         )
         metrics_rows += [
             (
@@ -643,20 +608,21 @@ def run_pipeline(
             summary_fut = dex.submit(summary_df.collect)
             top_rows = top_fut.result()
             summary_row = summary_fut.result()[0]
-            # tiny tables from already-collected rows: driver-written, no job
-            run_field = T.StructField("run_id", T.StringType())
-            _write_small_table(
-                out_dir,
-                "top_issues",
-                T.StructType(top.schema.fields + [run_field]),
-                [{**r.asDict(), "run_id": run_id} for r in top_rows],
-            )
-            _write_small_table(
-                out_dir,
-                "report_summary",
-                T.StructType(summary_df.schema.fields + [run_field]),
-                [{**summary_row.asDict(), "run_id": run_id}],
-            )
+            # tiny tables from already-collected rows: driver-written, no
+            # job; each run replaces the previous run's table
+            for table, df, rows in (
+                ("top_issues", top, top_rows),
+                ("report_summary", summary_df, [summary_row]),
+            ):
+                shutil.rmtree(f"{out_dir}/{table}", ignore_errors=True)
+                _write_small_table(
+                    out_dir,
+                    table,
+                    T.StructType(
+                        df.schema.fields + [T.StructField("run_id", T.StringType())]
+                    ),
+                    [{**r.asDict(), "run_id": run_id} for r in rows],
+                )
             for f in dated_futs:
                 f.result()
         if fuzzy_buckets:
@@ -701,7 +667,12 @@ def run_pipeline(
             int(n_rollup_collisions), None, None,
         )
     )
-    _append(spark, out_dir, "_metrics", metrics_rows, METRICS_SCHEMA)
+    _write_small_table(
+        out_dir,
+        "_metrics",
+        METRICS_SCHEMA,
+        [dict(zip(METRICS_SCHEMA.names, r)) for r in metrics_rows],
+    )
 
     # S6 analog: single JSON report document (reporting/generator.py:101-131)
     # — the human-facing daily report; built from the already-collected rows.
@@ -794,7 +765,6 @@ def main(argv=None):
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--parse-impl", default="native", choices=["native", "pandas"])
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--max-partitions", type=int, default=None)
     ap.add_argument("--cores", type=int, default=None)
@@ -829,7 +799,6 @@ def main(argv=None):
         args.sf_dir,
         args.out,
         args.run_id,
-        parse_impl=args.parse_impl,
         replicate=args.replicate,
         max_partitions=args.max_partitions,
         input_table=args.input_table,

@@ -20,9 +20,9 @@ from .parse import parse_turns
 from .transcripts import load_transcripts
 
 
-def _classified(spark: SparkSession, sf_dir: str, impl: str = "native") -> DataFrame:
+def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = load_transcripts(spark, sf_dir)
-    return route.classify_turns(enrich_turns(spark, parse_turns(tr, impl=impl)))
+    return route.classify_turns(enrich_turns(spark, parse_turns(tr)))
 
 
 def q_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
